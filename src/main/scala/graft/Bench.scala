@@ -1,7 +1,7 @@
 package graft
 
 import graft.codecs.Codecs
-import graft.core.IO
+import graft.core.{IO, Stages}
 import graft.gen.EventsGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,7 +23,8 @@ object Bench {
   /** The raw operators behind the invariant gates, timed next to the
     * SparkEntry queries (see the "raw operators" section in main).
     * Object-level so [[graft.tools.Remeasure]] can resolve a flagged
-    * operator row by name in its fresh JVM. */
+    * operator row by name in its fresh JVM. Each call is one
+    * [[Stages.scoped]] block, like a SparkEntry query. */
   private[graft] lazy val rawOperators: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "d05_simhash_op" -> (graft.operators.Dedup.d05SimHash _),
     "d09_lsh_cosine_op" -> (graft.operators.Dedup.d09RawPairs _),
@@ -36,7 +37,7 @@ object Bench {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
         graft.operators.Dedup.D09Tau, graft.operators.Dedup.D09Bits,
         graft.operators.Dedup.D09Bands))
-  )
+  ).map { case (n, q) => n -> ((s: SparkSession, d: String) => Stages.scoped(q(s, d))) }
 
   /** Spawn a FRESH JVM (same classpath + module args as this one) running
     * [[graft.tools.Remeasure]] over the flagged query names — the
@@ -44,8 +45,8 @@ object Bench {
     * survives in-process escalation is still ambiguous: the plan may
     * have regressed, or a contention window may have covered every
     * in-process rep equally (r8's p01, r9's st02 — both adjudicated
-    * environmental only by a HAND-run fresh-JVM TimeQ; this makes that
-    * procedure part of the artifact). Returns name → successful rep
+    * environmental only by a HAND-run fresh-JVM re-measurement; running
+    * Remeasure here makes that procedure part of the artifact). Returns name → successful rep
     * seconds; empty map / missing name when the child fails — the flag
     * then stands unadjudicated rather than silently cleared. */
   private def remeasureFreshJvm(sfDir: String, names: Seq[String],
@@ -413,13 +414,13 @@ object Bench {
             .partitionBy(col("qid"))
             .orderBy(org.apache.spark.sql.functions
               .round(col("c"), 6).desc, col("node").asc)
-          seed = fprobes.join(assigned, Seq("cid"))
+          seed = Stages.materialize(fprobes.join(assigned, Seq("cid"))
             .filter(col("vec_id") =!= col("qid"))
             .select(col("qid"), col("vec_id").as("node"),
               (array_dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("c"))
             .withColumn("rn", row_number().over(wSeed))
             .filter(col("rn") <= sim.S23Beam)
-            .select(col("qid"), col("node")).localCheckpoint()
+            .select(col("qid"), col("node")))
         }
         val s = time(force(sim.s23Serve(spark,
           graft.core.Tables(spark, sfDir, "embeddings")

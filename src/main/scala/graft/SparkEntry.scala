@@ -39,7 +39,9 @@ object SparkEntry {
     // estimate + restricted exact verify (round-17 verdict item 3)
     "d17_containment_dedup" -> Seq("d18_sketch_containment"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * is one [[graft.core.Stages.scoped]] block: the stages a query materializes
+    * are released once its result no longer references them. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Relational surface (north-star extensions; SURVEY §2.2)
     "q01_agg_pushdown" -> (Relational.q01 _),
@@ -644,7 +646,7 @@ object SparkEntry {
     // dedup tiers validate against, generated by the product (not test
     // tooling) and censused by the same pair pipeline d03 gates
     "g02_generator_docs" -> (graft.gen.DocsGenerator.g02 _)
-  )
+  ).map { case (n, q) => n -> ((s: SparkSession, d: String) => graft.core.Stages.scoped(q(s, d))) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

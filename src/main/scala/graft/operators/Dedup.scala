@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.{functions => gf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -240,15 +240,15 @@ object Dedup {
     // explode + hash chain per reference (measured ~6 corpus passes at
     // sf0.1; the e01 stage-input precedent). The deploy pipeline lands
     // postings as a stage artifact anyway — on a multi-node cluster
-    // swap localCheckpoint for the persisted postings store (d13's
-    // shape), same plan either way.
-    val inv = (cap match {
+    // swap the local checkpoint for the persisted postings store
+    // (d13's shape), same plan either way.
+    val inv = Stages.materialize(cap match {
       case Some(c) =>
         val hot = invAll.groupBy(col("s")).agg(count(lit(1)).as("df"))
           .filter(col("df") > c).select(col("s"))
         invAll.join(hot, Seq("s"), "left_anti")
       case None => invAll
-    }).localCheckpoint()
+    })
     val cnt = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // bottom-k sample postings: k smallest hashes per doc — a uniform
     // sample of the doc's (capped) shingle set, k-bounding the sketch
@@ -1439,14 +1439,13 @@ object Dedup {
     // the posting self-join, so it materializes once (≤ kq+1 grams per
     // doc — small) instead of re-running the gram explode + df agg +
     // window per side
-    val prefix = grams.join(gdf, Seq("gram"))
+    val prefix = Stages.materialize(grams.join(gdf, Seq("gram"))
       .repartition(par, col("doc_id"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= D16PrefixLen)
       .select(col("doc_id"), col("gram"))
       .join(lens, Seq("doc_id"))
-      .withColumn("lb", (col("len") / D16K).cast("long"))
-      .localCheckpoint()
+      .withColumn("lb", (col("len") / D16K).cast("long")))
     val probe = prefix.withColumn("lb",
       explode(array(col("lb") - 1, col("lb"), col("lb") + 1)))
     val cand = prefix.as("a").join(probe.as("b"), Seq("gram", "lb"))
@@ -1491,27 +1490,28 @@ object Dedup {
     * propagation — every node takes the min label over itself and its
     * neighbors — and (2) pointer jumping — lbl := lbl(lbl) — which
     * doubles the propagation horizon, so rounds needed are
-    * O(log diameter), not O(diameter): 25 rounds cover any graph that
-    * fits on disk. Each round's labels are localCheckpoint'ed (lineage
+    * O(log diameter), not O(diameter): gate corpora converge in ~5,
+    * and the [[CCMaxIters]] = 64 cap is only a safety valve. Each round's labels and
+    * supernode edges are [[graft.core.Stages.materialize]]d (lineage
     * would otherwise deepen by two joins per round and the 20-round
-    * plan tree broke re-planning in round 1) and the superseded round
-    * is explicitly unpersisted (GraftShims.unpersistLocalCheckpoint) so
-    * a long bench session leaks no executor storage. On a multi-node
-    * cluster swap localCheckpoint for reliable checkpoint(dir) —
-    * same shape, executor-loss-safe.
+    * plan tree broke re-planning in round 1), and the superseded round
+    * is [[graft.core.Stages.release]]d as soon as the next one lands,
+    * so peak executor storage stays at about two rounds; the
+    * enclosing scope frees the rest. On a multi-node cluster swap the
+    * local checkpoint for reliable checkpoint(dir) — same shape,
+    * executor-loss-safe.
     *
     * Throws if the loop exits unconverged — silently returning partial
     * labels would ship WRONG keep_ids (judge/ADVICE round-1 finding).
     */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
     // every round's checkpoint is REBASED: localCheckpoint preserves
     // the pre-checkpoint plan's sizeInBytes, and across rounds those
     // estimates COMPOUND (visitJoin multiplies child sizes) until the
     // stats product overflows BigInteger during planning (hit at the
     // 100×-sf0.1 e07 census, round 17)
     def cp(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftShims.rebaseCheckpoint(df.localCheckpoint())
+      org.apache.spark.sql.GraftShims.rebaseCheckpoint(Stages.materialize(df))
     // MIN-CONTRACTION rounds (the round-17 rewrite): each round every
     // supernode with a smaller neighbor merges into its minimum
     // neighbor, so a component's supernode count at least halves per
@@ -1580,7 +1580,7 @@ object Dedup {
         .select(col("node"),
           least(col("lbl"), coalesce(col("m"), col("lbl"))).as("lbl"))
       val jumped = cp(jump(j1))
-      unpersistLocalCheckpoint(labels)
+      Stages.release(labels)
       labels = jumped
       // (3) re-derive the supernode edge list from the ORIGINAL edges
       // through the new labels (soundness note above) — the next
@@ -1592,13 +1592,11 @@ object Dedup {
         .join(m.select(col("node").as("dst"), col("lbl").as("d2")), Seq("dst"))
         .select(col("s2").as("src"), col("d2").as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
-      if (cedges ne edges0) unpersistLocalCheckpoint(cedges)
+      if (cedges ne edges0) Stages.release(cedges)
       cedges = nextEdges
       converged = cedges.isEmpty
       iter += 1
     }
-    if (cedges ne edges0) unpersistLocalCheckpoint(cedges)
-    unpersistLocalCheckpoint(edges0)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $CCMaxIters rounds — " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1484,11 +1484,10 @@ object Multimodal {
     // embedding corpus, the final neighbor→video join) — materialize it
     // once instead of re-running the frame sample + assignment chain
     // per reference (bounded: one row per sampled frame)
-    val ids = frames.join(base, Seq("media_id"))
+    val ids = Stages.materialize(frames.join(base, Seq("media_id"))
       .withColumn("vec_id",
         col("fbase") + row_number().over(wIn).cast("long") + 9L)
-      .drop("fbase")
-      .localCheckpoint()
+      .drop("fbase"))
     val query = ids.filter(col("vec_id") === 10L)
       .select(lit(0L).as("vec_id"), col("frame_hex"))
     val h = conv(rpad(col("frame_hex"), 8, "0"), 16, 10).cast("long")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,8 +48,8 @@ object Pipeline {
     * the survivors). Semantics identical. */
   private[graft] def containmentDropsFromPostings(spark: SparkSession,
       inv: DataFrame, cap: Long): DataFrame = {
-    val cpairs = Dedup.d18OverPostings(spark, inv, Some(cap))._2
-      .select(col("contained_id"), col("container_id")).localCheckpoint()
+    val cpairs = Stages.materialize(Dedup.d18OverPostings(spark, inv, Some(cap))._2
+      .select(col("contained_id"), col("container_id")))
     val mutual = cpairs.as("x").join(cpairs.as("y"),
         col("x.contained_id") === col("y.container_id") &&
           col("x.container_id") === col("y.contained_id"))
@@ -129,21 +129,21 @@ object Pipeline {
     // the quality score table is consulted twice (the stage-1 keep-set
     // and the d14 survivor argmax) — one corpus-sized two-column frame,
     // checkpointed so the t02 scoring chain runs once per query
-    val qual = TextOps.t02Quality(spark, dir)
-      .select(col("doc_id"), col("quality_bp")).localCheckpoint()
+    val qual = Stages.materialize(TextOps.t02Quality(spark, dir)
+      .select(col("doc_id"), col("quality_bp")))
     // stage 1: quality keep-set — checkpointed like every other stage
     // input: s1 is walked four times (routing count, the d08 pair
     // graph, the s2 join, the census), and an unmaterialized s1
     // re-runs the t02 scoring chain per reference
-    val s1 = d.join(qual.filter(col("quality_bp") >= qualityBar)
-      .select("doc_id"), "doc_id").localCheckpoint()
+    val s1 = Stages.materialize(d.join(qual.filter(col("quality_bp") >= qualityBar)
+      .select("doc_id"), "doc_id"))
     val n1 = s1.count() // routing scalar: the corpus-relative df cap
     // ONE hashed-postings table over the stage-1 survivors,
     // materialized: the stage-2 pair graph and the stage-3 containment
     // chain both consume it (each with its own corpus-relative cap,
     // identical expressions) — the round-18 shape re-ran tokenize +
     // shingle over the survivor corpus once per stage (guide §1.2)
-    val invS1 = Dedup.postingsOf(Dedup.shingledOf(s1)).localCheckpoint()
+    val invS1 = Stages.materialize(Dedup.postingsOf(Dedup.shingledOf(s1)))
     // stage 2: capped pair graph over survivors → CC → canonical member
     val pairs = Dedup.ngramJaccardPairsFromPostings(invS1, Some(Dedup.capDf(n1)))
       .select(col("ida"), col("idb"))
@@ -155,10 +155,10 @@ object Pipeline {
     // the survivor id set feeds the semantic-stage scratch write, s3,
     // and the census — checkpoint it (the d07 discipline) so the
     // pair-graph + CC + argmax chain materializes once
-    val canonIds = clustered.groupBy("cluster_id")
+    val canonIds = Stages.materialize(clustered.groupBy("cluster_id")
       .agg(max_by(col("doc_id"),
         struct(col("quality_bp"), (-col("doc_id")).as("nid"))).as("doc_id"))
-      .select("doc_id").localCheckpoint()
+      .select("doc_id"))
     // stage 3 re-slices the chain's one materialized postings table by
     // the canonical-survivor ids instead of re-tokenizing the survivor
     // text (per-doc shingles are a pure function of the text, so the
@@ -173,14 +173,13 @@ object Pipeline {
     // stage 3: CONTAINMENT dedup (quote/excerpt shape) over the
     // canonical survivors — the round-17 quote-farm gap, closed with
     // the d18 sketch tier (== d17 exactly)
-    val s3c = s2.join(containmentDropsFromPostings(spark,
+    val s3c = Stages.materialize(s2.join(containmentDropsFromPostings(spark,
         invS1.join(canonIds, Seq("doc_id"), "left_semi"), Dedup.capDf(n2)),
-      Seq("doc_id"), "left_anti").localCheckpoint()
+      Seq("doc_id"), "left_anti"))
     // stage 4: LONG-SPAN dedup — a ≥[[TextOps.T27Min]]-token verbatim
     // splice between survivors drops the higher id (the round-17
     // long-splice gap, closed with t27's lossless anchor tier)
-    val s4sp = s3c.join(spanDrops(spark, s3c), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+    val s4sp = Stages.materialize(s3c.join(spanDrops(spark, s3c), Seq("doc_id"), "left_anti"))
     // stage 5: SEMANTIC dedup over the survivors' embeddings — the
     // survivor-joined embedding set lands as a scratch corpus so d11's
     // train/assign/pair machinery runs on it verbatim (quantizer K and
@@ -205,8 +204,8 @@ object Pipeline {
     // stage 6: holdout-overlap decontamination over the survivors —
     // checkpointed (small id set) because s6 is walked by both the
     // pack stage and the census
-    val contaminated = Dedup.decontaminate(s5, n5)
-      .select(col("train_id").as("doc_id")).distinct().localCheckpoint()
+    val contaminated = Stages.materialize(Dedup.decontaminate(s5, n5)
+      .select(col("train_id").as("doc_id")).distinct())
     val s6 = s5.filter(Sinks.splitBucket(col("doc_id")) < 980)
       .join(contaminated, Seq("doc_id"), "left_anti")
     // stage 7: packed-sequence count over survivors (t16's token rule)
@@ -300,13 +299,12 @@ object Pipeline {
     // checkpointed so the t02 scoring chain runs ONCE per query instead
     // of once per reference (guide §5; measured as part of the round-19
     // e02 restructure)
-    val passing = qual.filter(col("quality_bp") >= E01QualityBp)
-      .select("doc_id").localCheckpoint()
+    val passing = Stages.materialize(qual.filter(col("quality_bp") >= E01QualityBp)
+      .select("doc_id"))
     // base survivors: ~90% of the corpus and IMMUTABLE across the whole
     // chain — materialize the text once and let every stage re-slice it
     // (at deploy this is the persisted curated corpus, never recomputed)
-    val baseS = d.filter(col("doc_id") < nb).join(passing, "doc_id")
-      .localCheckpoint()
+    val baseS = Stages.materialize(d.filter(col("doc_id") < nb).join(passing, "doc_id"))
     val nbS = baseS.count()
     val deltaAll = d.filter(col("doc_id") >= nb)
     // stage 1: quality gate on the delta (delta-sized; `passing` is
@@ -323,10 +321,9 @@ object Pipeline {
     // already names.
     // pairs with ida < nb ≤ idb are delta-vs-base hits, pairs with
     // nb ≤ ida are within-delta
-    val invU = Dedup.postingsOf(Dedup.shingledOf(baseS.unionByName(s1)))
-      .localCheckpoint()
-    val pairs = Dedup.ngramJaccardPairsFromPostings(invU, Some(Dedup.capDf(nu)))
-      .select(col("ida"), col("idb")).localCheckpoint()
+    val invU = Stages.materialize(Dedup.postingsOf(Dedup.shingledOf(baseS.unionByName(s1))))
+    val pairs = Stages.materialize(Dedup.ngramJaccardPairsFromPostings(invU, Some(Dedup.capDf(nu)))
+      .select(col("ida"), col("idb")))
     // stage 2: drop delta docs near-dup of a base survivor
     val crossDrop = pairs.filter(col("ida") < nb && col("idb") >= nb)
       .select(col("idb").as("doc_id")).distinct()
@@ -338,13 +335,13 @@ object Pipeline {
       .select("ida", "idb")
     val labels = Dedup.connectedComponents(p3)
       .select(col("node").as("doc_id"), col("lbl"))
-    val canonIds = s2.select("doc_id").join(labels, Seq("doc_id"), "left")
+    val canonIds = Stages.materialize(s2.select("doc_id").join(labels, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("lbl"), col("doc_id")))
       .join(qual, "doc_id")
       .groupBy("cluster_id")
       .agg(max_by(col("doc_id"),
         struct(col("quality_bp"), (-col("doc_id")).as("nid"))).as("doc_id"))
-      .select("doc_id").localCheckpoint()
+      .select("doc_id"))
     val s3 = s2.join(canonIds, "doc_id")
     // stage 4: CONTAINMENT vs the index — a delta doc contained in a
     // base survivor or in any LOWER-id survivor drops (base state is
@@ -363,9 +360,9 @@ object Pipeline {
     val invU3 = invU.join(u3ids, Seq("doc_id"), "left_semi")
     val cpairs = Dedup.d18OverPostings(spark, invU3,
       Some(Dedup.capDf(nu3)))._2
-    val cdrop = cpairs.filter(col("contained_id") >= nb &&
+    val cdrop = Stages.materialize(cpairs.filter(col("contained_id") >= nb &&
         col("container_id") < col("contained_id"))
-      .select(col("contained_id").as("doc_id")).distinct().localCheckpoint()
+      .select(col("contained_id").as("doc_id")).distinct())
     val s4c = s3.join(cdrop, Seq("doc_id"), "left_anti")
     // stage 5: LONG-SPAN vs the index — a delta doc sharing a
     // ≥T27Min-token verbatim span with a base survivor or a lower-id
@@ -380,7 +377,7 @@ object Pipeline {
     val sdrop = TextOps.t27SpansOver(spark, u5)
       .filter(col("doc_b") >= nb)
       .select(col("doc_b").as("doc_id")).distinct()
-    val s5sp = s4c.join(sdrop, Seq("doc_id"), "left_anti").localCheckpoint()
+    val s5sp = Stages.materialize(s4c.join(sdrop, Seq("doc_id"), "left_anti"))
     // stage 6: survivors vs the GLOBAL holdout split (identical rows
     // dedupe, so dropDuplicates is deterministic here)
     val holdoutAll = d.filter(Sinks.splitBucket(col("doc_id")) >= 980)
@@ -388,8 +385,8 @@ object Pipeline {
     val n6c = u6.count() // routing scalar: decontam's cap
     // contaminated ids feed s6, which the pack stage AND the census
     // both walk — checkpoint the 8-gram overlap scan (small id set)
-    val contaminated = Dedup.decontaminate(u6, n6c)
-      .select(col("train_id").as("doc_id")).distinct().localCheckpoint()
+    val contaminated = Stages.materialize(Dedup.decontaminate(u6, n6c)
+      .select(col("train_id").as("doc_id")).distinct())
     val s6 = s5sp.filter(Sinks.splitBucket(col("doc_id")) < 980)
       .join(contaminated, Seq("doc_id"), "left_anti")
     // stage 7: packed-sequence count over the shipped delta
@@ -731,7 +728,7 @@ object Pipeline {
     * generation, same census tail. */
   def e04LeakageAudit(spark: SparkSession, dir: String): DataFrame = {
     val split = e03ClusterSplit(spark, dir)
-      .select(col("doc_id"), col("split")).cache()
+      .select(col("doc_id"), col("split")).cache() // lazy pair, freed below
     val sa = split.select(col("doc_id").as("ida"), col("split").as("sa"))
     val sb = split.select(col("doc_id").as("idb"), col("split").as("sb"))
     def pairCensus(tier: String, pairs: DataFrame): DataFrame =
@@ -756,14 +753,13 @@ object Pipeline {
     // materialize the 4-row census, then release the split cache —
     // the d07/s18 supersession discipline (nothing from this audit
     // stays pinned across a long session except the 4 result rows)
-    val out = pairCensus("exact_prefix", exactPairs)
+    val out = Stages.materialize(pairCensus("exact_prefix", exactPairs)
       .unionByName(pairCensus("lexical",
         Dedup.d08NgramJaccardCapped(spark, dir).select("ida", "idb")))
       .unionByName(pairCensus("semantic",
         Dedup.d06EmbeddingNearDup(spark, dir).select("ida", "idb")))
       .unionByName(gramRow)
-      .orderBy("tier")
-      .localCheckpoint()
+      .orderBy("tier"))
     split.unpersist()
     out
   }
@@ -835,25 +831,21 @@ object Pipeline {
     // (anti-join, round-1, pick join), and an uncached pool would
     // recompute the whole two-tier fusion DAG per reference — measured
     // 205 s vs s14's own 4.6 s at the 10× gate before this boundary
-    val pool = Similarity.s14Fused(spark, dir)
+    val pool = Stages.materialize(Similarity.s14Fused(spark, dir)
       .withColumn("rp", row_number().over(wP))
       .filter(col("rp") <= Similarity.S14PoolK)
       .join(Tables(spark, dir, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
         col("doc_id") === col("vec_id"))
       .select(col("query_id").as("qid"), col("doc_id").as("nid"), col("e"),
-        expr("rrf_mu * 61 div 2").as("rel_m"))
-      .localCheckpoint()
+        expr("rrf_mu * 61 div 2").as("rel_m")))
     val sel = Similarity.mmrSelect(pool, E05K)
-    val out = sel
+    val out = Stages.materialize(sel
       .select(col("qid").as("query_id"), col("rnk"),
         col("nid").as("doc_id"), col("score_m").as("mmr_score_m"))
-      .orderBy("query_id", "rnk")
-      .localCheckpoint()
-    // release the pool and the final round's checkpoint — only the
-    // ≤ K·queries-row page stays pinned (the s18/e04 discipline)
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(pool)
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(sel)
+      .orderBy("query_id", "rnk"))
+    // the query's scope frees the pool and the final round's stage —
+    // only the ≤ K·queries-row page stays pinned (the s18/e04 shape)
     out
   }
 
@@ -934,8 +926,8 @@ object Pipeline {
     val a = Similarity.s26BuildBase(spark, dir)
     val allFull = Similarity.emb(spark, dir)
     val delta = allFull.filter(col("vec_id") >= a.nBase)
-    val fwd = Similarity.s26FwdEdges(spark, delta, allFull, a).localCheckpoint()
-    val upd = Similarity.s26BackLinks(fwd, a.gBase, allFull).localCheckpoint()
+    val fwd = Stages.materialize(Similarity.s26FwdEdges(spark, delta, allFull, a))
+    val upd = Stages.materialize(Similarity.s26BackLinks(fwd, a.gBase, allFull))
     // the folded graph (edges with 4-dp cosines, e06's grid)
     val gBaseFull = Similarity.s22KnnGraph(spark, a.baseDir)
       .select(col("src_id"), col("dst_id"), col("cos_sim"))
@@ -950,8 +942,8 @@ object Pipeline {
         .select(least(col("src_id"), col("dst_id")).as("ida"),
           greatest(col("src_id"), col("dst_id")).as("idb"))
         .distinct()
-    val pairsBase = pairsOf(gBaseFull).localCheckpoint()
-    val pairsFold = pairsOf(folded).localCheckpoint()
+    val pairsBase = Stages.materialize(pairsOf(gBaseFull))
+    val pairsFold = Stages.materialize(pairsOf(folded))
     val verdict = e07IncrementalVerdict(pairsBase, pairsFold,
       allFull.filter(col("vec_id") < a.nBase).select("vec_id"),
       delta.select("vec_id"))
@@ -975,10 +967,9 @@ object Pipeline {
     // the BASE verdict — what unaffected nodes keep verbatim
     val lblBase = Dedup.connectedComponents(pairsBase)
       .select(col("node").as("vec_id"), col("lbl"))
-    val verdictBase = baseIds
+    val verdictBase = Stages.materialize(baseIds
       .join(lblBase, Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("lbl"), col("vec_id")).as("keep_id"))
-      .localCheckpoint()
+      .select(col("vec_id"), coalesce(col("lbl"), col("vec_id")).as("keep_id")))
     // delta-bounded affected set: changed pairs → base components → members
     val changed = pairsFold.exceptAll(pairsBase)
       .unionByName(pairsBase.exceptAll(pairsFold)).distinct()
@@ -989,8 +980,8 @@ object Pipeline {
     val affBase = verdictBase
       .join(broadcast(affLbls), Seq("keep_id"), "left_semi")
       .select("vec_id")
-    val affected = affBase
-      .unionByName(deltaIds).distinct().localCheckpoint()
+    val affected = Stages.materialize(affBase
+      .unionByName(deltaIds).distinct())
     // exact CC on the affected subgraph alone (see boundary argument)
     val pairsAff = pairsFold
       .join(affected.withColumnRenamed("vec_id", "ida"), Seq("ida"), "left_semi")

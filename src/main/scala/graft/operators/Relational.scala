@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Stages
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -769,26 +770,23 @@ object Relational {
     * symmetrized internally — the RelationalSpec seam. Returns
     * (node, rk) after [[Q35Iters]] rounds. */
   private[graft] def pageRankOver(e0: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
     val eraw = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val edges = eraw
+    val edges = Stages.materialize(eraw
       .join(eraw.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .repartition(col("src")).localCheckpoint()
-    var rk = edges.select(col("src").as("node")).distinct()
-      .withColumn("rk", lit(1000000L)).localCheckpoint()
+      .repartition(col("src")))
+    var rk = Stages.materialize(edges.select(col("src").as("node")).distinct()
+      .withColumn("rk", lit(1000000L)))
     for (_ <- 1 to Q35Iters) {
       // every node has an in-edge (undirected graph), so the inner
       // join loses nothing — and the oracle states the same join
-      val next = edges.join(rk, col("src") === col("node"))
+      val next = Stages.materialize(edges.join(rk, col("src") === col("node"))
         .select(col("dst"), expr("rk div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"),
-          (lit(Q35BaseMu) + expr("(85 * s) div 100")).as("rk"))
-        .localCheckpoint()
-      unpersistLocalCheckpoint(rk)
+          (lit(Q35BaseMu) + expr("(85 * s) div 100")).as("rk")))
+      Stages.release(rk)
       rk = next
     }
-    unpersistLocalCheckpoint(edges)
     rk
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -272,7 +272,8 @@ object Similarity {
     // downstream tier (assignment, probe, oracle twins) — cache it so
     // the Lloyd chain materializes ONCE per query instead of once per
     // reference (plans re-evaluate an uncached subtree per reference);
-    // K rows, session-lifetime, deliberately never unpersisted
+    // K rows, session-lifetime, deliberately never unpersisted: a
+    // memo store the session's CacheManager owns, not a query stage
     cents.cache()
   }
 
@@ -543,7 +544,8 @@ object Similarity {
           x => x("v")).as("ce"))
         .withColumn("cnrm", sqrt(array_dot(col("ce"), col("ce"))))
     // fine centroids are a k1·k2-row artifact — cache like
-    // trainedCentroids so the fine Lloyd chain runs once per query
+    // trainedCentroids so the fine Lloyd chain runs once per query (a
+    // session memo store the CacheManager owns, not a query stage)
     cents = cents.cache()
     val assigned = assignFine(coarse, cents)
       .select(col("vec_id"), col("e"), col("nrm"),
@@ -1053,7 +1055,8 @@ object Similarity {
     // M·nCodes rows (128 by default) referenced by encode AND the
     // query-side distance tables — cache for the same reason as
     // trainedCentroids (one materialization per query, not per plan
-    // reference); never unpersisted
+    // reference); never unpersisted — a session memo store the
+    // CacheManager owns, not a query stage
     cb.cache()
   }
 
@@ -1981,21 +1984,18 @@ object Similarity {
     * broadcast-sized regardless of corpus size. */
   private[graft] def mmrSelect(pool: DataFrame, k: Int,
       relW: Long = MmrRelW, divW: Long = MmrDivW): DataFrame = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
     val wRel = Window.partitionBy(col("qid"))
       .orderBy(col("rel_m").desc, col("nid").asc)
     // each round references `selected` three times (anti-join, sim
     // join, union); without a materialization boundary the lineage
-    // would grow 3^k subtrees — localCheckpoint'ing the ≤10·r-row
-    // round result keeps the plan linear in k, and the d07
-    // round-supersession discipline (unpersist the previous round
-    // once the next is materialized) keeps a long session from
-    // accumulating superseded round storage
-    var selected = pool.withColumn("rk", row_number().over(wRel))
+    // would grow 3^k subtrees — materializing the ≤10·r-row round
+    // result keeps the plan linear in k, and each superseded round is
+    // released as soon as the next one lands (the CC loop's
+    // discipline), so at most two rounds are pinned at a time
+    var selected = Stages.materialize(pool.withColumn("rk", row_number().over(wRel))
       .filter(col("rk") === 1)
       .select(col("qid"), col("nid"), col("e"), lit(1L).as("rnk"),
-        (lit(relW) * col("rel_m")).as("score_m"))
-      .localCheckpoint()
+        (lit(relW) * col("rel_m")).as("score_m")))
     for (r <- 2 to k) {
       val selE = selected.select(col("qid"), col("nid").as("snid"),
         col("e").as("se"))
@@ -2013,8 +2013,8 @@ object Similarity {
         .join(pool.select(col("qid"), col("nid"), col("e")), Seq("qid", "nid"))
         .select(col("qid"), col("nid"), col("e"), lit(r.toLong).as("rnk"),
           col("score_m"))
-      val next = selected.unionByName(pick).localCheckpoint()
-      unpersistLocalCheckpoint(selected)
+      val next = Stages.materialize(selected.unionByName(pick))
+      Stages.release(selected)
       selected = next
     }
     selected
@@ -2045,20 +2045,17 @@ object Similarity {
       .withColumn("rn", row_number().over(wPool))
       .filter(col("rn") <= MmrPool)
       .select("qid", "nid", "e", "rel_m")
-      .cache()
+      .cache() // lazy pair, unpersisted once the result is materialized
     val sel = mmrSelect(pool, K)
     // the greedy rounds are materialized inside mmrSelect, so the
-    // final result can be pinned once and BOTH the pool cache and the
-    // last round's checkpoint released — nothing from this query
-    // accumulates across a long multi-query session except the
-    // ≤K·queries-row result itself
-    val out = sel
+    // final result can be pinned once and the pool cache released; the
+    // query's scope frees the last round's stage, so nothing from this
+    // query stays pinned except the ≤K·queries-row result itself
+    val out = Stages.materialize(sel
       .select(col("qid").as("query_id"), col("rnk"),
         col("nid").as("neighbor_id"), col("score_m").as("mmr_score_m"))
-      .orderBy("query_id", "rnk")
-      .localCheckpoint()
+      .orderBy("query_id", "rnk"))
     pool.unpersist()
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(sel)
     out
   }
 
@@ -2474,38 +2471,24 @@ object Similarity {
     * release spec's observability seam. */
   private[graft] def graphMemoSizes: (Int, Int) = (s22Memo.size, s26Memo.size)
 
-  /** The per-query transient edge checkpoints [[servedOverEdges]]
-    * handed out — pinned while their serve results may still be
-    * consumed (the results reference them lazily), drained by
-    * [[releaseGraphStores]]. */
-  private val transientPins =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** The transient-pin discipline for graph consumers (round-17
-    * advice): s23/s24/s25/s27/s28 each materialize the stored graph
-    * ONCE per query as a localCheckpoint the walk/prune references
-    * every round. Left alone those corpus-sized edge pins accumulate
-    * executor storage across a long session until the ContextCleaner
-    * happens to GC them. Every such checkpoint is therefore
-    * REGISTERED here and [[releaseGraphStores]] — the family's
-    * eviction verb — unpersists them deterministically. (Releasing
-    * eagerly per query would require materializing the serve result
-    * inside the operator, which would collapse the serve plan the
-    * PlanSpecs pin; the registry keeps the plan intact and the release
-    * explicit.) */
+  /** The graph serve faces (s23/s24/s25/s27/s28) each materialize the
+    * stored graph ONCE per query as a stage the walk/prune references
+    * every round. Releasing it eagerly would require materializing the
+    * serve result inside the operator, which would collapse the serve
+    * plan the PlanSpecs pin; the stage therefore survives its query's
+    * scope (the result references it) and [[releaseGraphStores]] — the
+    * family's eviction verb — drains it with the scope survivors. */
   private def servedOverEdges(edges: DataFrame)
-      (serve: DataFrame => DataFrame): DataFrame = {
-    val g = edges.localCheckpoint()
-    transientPins.add(g)
-    serve(g)
-  }
+      (serve: DataFrame => DataFrame): DataFrame =
+    serve(Stages.materialize(edges))
 
-  /** Pins currently registered — the release spec's seam. */
-  private[graft] def transientPinCount: Int = transientPins.size
+  /** Stage survivors currently recorded — the release spec's seam. */
+  private[graft] def transientPinCount: Int = Stages.survivorCount
 
   /** Release every graph artifact THIS application holds: drop the
     * memoized graph-store tables, unpersist the s26 base builds'
-    * checkpointed edge sets, and drain the transient serve pins — so a
+    * checkpointed edge sets, and drain the stage survivors (the serve
+    * faces' edge stages among them, see [[servedOverEdges]]) — so a
     * long-lived session holds NOTHING for the graph family after its
     * last consumer (the round-16 advice's eviction path, completed per
     * round-17 advice: gBase was abandoned still-pinned, and other
@@ -2514,7 +2497,6 @@ object Similarity {
     * owners release them. The parquet files live in scratch dirs that
     * self-delete at JVM exit; a later caller simply rebuilds. */
   private[graft] def releaseGraphStores(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
     val app = spark.sparkContext.applicationId
     val sIt = s22Memo.entrySet().iterator()
     while (sIt.hasNext) {
@@ -2528,16 +2510,11 @@ object Similarity {
     while (aIt.hasNext) {
       val e = aIt.next()
       if (e.getKey._1 == app) {
-        unpersistLocalCheckpoint(e.getValue.gBase)
+        Stages.release(e.getValue.gBase)
         aIt.remove()
       }
     }
-    var p = transientPins.poll()
-    while (p != null) {
-      try unpersistLocalCheckpoint(p)
-      catch { case _: IllegalStateException => () } // owner context gone
-      p = transientPins.poll()
-    }
+    Stages.releaseSurvivors()
   }
 
   /** The UNCACHED, UNMEMOIZED build plan — the PlanSpec seam (a cached
@@ -2673,7 +2650,8 @@ object Similarity {
     // the store read materializes ONCE per query (a transient
     // per-query checkpoint — the walk references the edge set every
     // round, and 4 re-scans of the parquet store cost ~0.8 s at sf0.1)
-    // and is RELEASED once the result lands ([[servedOverEdges]])
+    // and stays pinned only while the result may still read it
+    // ([[servedOverEdges]])
     servedOverEdges(s22KnnGraph(spark, dir)
         .select(col("src_id"), col("dst_id"))) { graph =>
       s23Serve(spark, emb(spark, dir), graph,
@@ -2738,7 +2716,7 @@ object Similarity {
     // (Catalyst's constraint rewrite rejects that lineage)
     def fresh(df: DataFrame): DataFrame =
       df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
-    var beam = seed.localCheckpoint()
+    var beam = Stages.materialize(seed)
     var vis = beam
     val fCounts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
@@ -2747,13 +2725,12 @@ object Similarity {
         // self never enters the walk — see the scaladoc's honesty rule
         .filter(col("g.dst_id") =!= col("b.qid"))
         .select(col("b.qid").as("qid"), col("g.dst_id").as("node"))
-      val cand = fresh(beam).unionByName(nbrs).distinct().localCheckpoint()
-      beam = s23ScoreOf(all, cand)
+      val cand = Stages.materialize(fresh(beam).unionByName(nbrs).distinct())
+      beam = Stages.materialize(s23ScoreOf(all, cand)
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= beamWidth)
-        .select(col("qid"), col("node"))
-        .localCheckpoint()
-      vis = fresh(vis).unionByName(fresh(cand)).distinct().localCheckpoint()
+        .select(col("qid"), col("node")))
+      vis = Stages.materialize(fresh(vis).unionByName(fresh(cand)).distinct())
       fCounts += beam.groupBy(col("qid"))
         .agg(count(lit(1)).cast("long").as(s"b$r"))
     }
@@ -2886,8 +2863,8 @@ object Similarity {
   /** [[s24DiverseGraph]] at explicit degree — the sweep/spec seam. */
   private[graft] def s24At(spark: SparkSession, dir: String,
       degree: Int): DataFrame =
-    // one materialized read — the prune references g twice per round;
-    // released once the (smaller) pruned graph lands
+    // one materialized read — the prune references g twice per round
+    // (a scope survivor while the pruned graph still references it)
     servedOverEdges(s22KnnGraph(spark, dir)) { g =>
       s24PruneOver(g, emb(spark, dir), degree)
     }
@@ -2898,9 +2875,8 @@ object Similarity {
       degree: Int): DataFrame = {
     def vecsAs(id: String, v: String): DataFrame =
       all.select(col("vec_id").as(id), col("e").as(v))
-    var kept = g.filter(col("rnk") === 1)
-      .select(col("src_id"), col("dst_id"), col("rnk"))
-      .localCheckpoint()
+    var kept = Stages.materialize(g.filter(col("rnk") === 1)
+      .select(col("src_id"), col("dst_id"), col("rnk")))
     for (_ <- 2 to degree) {
       val remaining = g.select(col("src_id"), col("dst_id"), col("rnk"))
         .join(kept.select(col("src_id"), col("dst_id")),
@@ -2921,7 +2897,7 @@ object Similarity {
         .withColumn("rn", row_number().over(wNext))
         .filter(col("rn") === 1)
         .select(col("src_id"), col("dst_id"), col("rnk"))
-      kept = kept.unionByName(next).localCheckpoint()
+      kept = Stages.materialize(kept.unionByName(next))
     }
     val wOut = Window.partitionBy(col("src_id")).orderBy(col("rnk").asc)
     kept.join(g, Seq("src_id", "dst_id", "rnk"))
@@ -3051,7 +3027,7 @@ object Similarity {
     val a = s26BuildBase(spark, dir)
     val allFull = emb(spark, dir)
     val delta = allFull.filter(col("vec_id") >= a.nBase)
-    val fwd = s26FwdEdges(spark, delta, allFull, a).localCheckpoint()
+    val fwd = Stages.materialize(s26FwdEdges(spark, delta, allFull, a))
     val upd = s26BackLinks(fwd, a.gBase, allFull)
     s26Faces(fwd, upd)
   }
@@ -3097,7 +3073,9 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
     // base graph + FROZEN base model (cached by the graph build)
     // materialized once: every st18 micro-batch back-link pass and the
-    // s26/e07 faces re-reference the base edge set
+    // s26/e07 faces re-reference the base edge set. A session-lifetime
+    // memo store, not a query stage: owned by s26Memo and released by
+    // releaseGraphStores
     val gBase = s22GraphAt(spark, baseDir, cellTarget, fineProbes, S22Pool)
       .select(col("src_id"), col("dst_id")).localCheckpoint()
     val (k1, k2) = d12FactorsAt(nBase, cellTarget)
@@ -3416,31 +3394,29 @@ object Similarity {
       df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
     val wBeam = Window.partitionBy(col("qid"))
       .orderBy(round(col("c"), 6).desc, col("node").asc)
-    var beamU = seedU.localCheckpoint()
-    var beamL = seedL.localCheckpoint()
-    var vis = fresh(beamU).unionByName(fresh(beamL)).distinct().localCheckpoint()
+    var beamU = Stages.materialize(seedU)
+    var beamL = Stages.materialize(seedL)
+    var vis = Stages.materialize(fresh(beamU).unionByName(fresh(beamL)).distinct())
     for (_ <- 1 to S23Rounds) {
       val front = fresh(beamU).unionByName(fresh(beamL)).distinct()
       val nbrs = broadcast(front.as("b"))
         .join(graph.as("g"), col("b.node") === col("g.src_id"))
         .filter(col("g.dst_id") =!= col("b.qid"))
         .select(col("b.qid").as("qid"), col("g.dst_id").as("node"))
-      val cand = fresh(front).unionByName(nbrs).distinct().localCheckpoint()
-      val scored = s23ScoreOf(all, cand).localCheckpoint()
-      beamU = scored
+      val cand = Stages.materialize(fresh(front).unionByName(nbrs).distinct())
+      val scored = Stages.materialize(s23ScoreOf(all, cand))
+      beamU = Stages.materialize(scored
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= S23Beam)
-        .select(col("qid"), col("node"))
-        .localCheckpoint()
-      beamL = scored
+        .select(col("qid"), col("node")))
+      beamL = Stages.materialize(scored
         .join(nodeLbl, Seq("node"))
         .join(qlbl, Seq("qid"))
         .filter(col("label") === col("qlabel"))
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= S23Beam)
-        .select(col("qid"), col("node"))
-        .localCheckpoint()
-      vis = fresh(vis).unionByName(fresh(cand)).distinct().localCheckpoint()
+        .select(col("qid"), col("node")))
+      vis = Stages.materialize(fresh(vis).unionByName(fresh(cand)).distinct())
     }
     val w = Window.partitionBy(col("qid"))
       .orderBy(round(col("c"), 6).desc, col("node").asc)
@@ -3663,7 +3639,7 @@ object Similarity {
     val a = s26BuildBase(spark, dir)
     val allFull = emb(spark, dir)
     val delta = allFull.filter(col("vec_id") >= a.nBase)
-    val fwd = s26FwdEdges(spark, delta, allFull, a).localCheckpoint()
+    val fwd = Stages.materialize(s26FwdEdges(spark, delta, allFull, a))
     val upd = s26BackLinks(fwd, a.gBase, allFull)
     // the versioned store: full base adjacency at ver=-1 …
     val baseFull = s22KnnGraph(spark, a.baseDir)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1357,22 +1357,21 @@ object Sinks {
         col("n"), col("sum_cents"))
 
   private[graft] def p15Refresh(spark: SparkSession, wh: String,
-      delta: DataFrame, touchedDays: Seq[Long]): Unit = {
-    import org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint
+      delta: DataFrame, touchedDays: Seq[Long]): Unit = Stages.scoped {
     // Materialize the merged touched-day rows BEFORE the overwrite:
     // Spark's documented contract forbids a write that reads the path
     // it replaces (dynamic mode only happens to work on 4.1.2 because
-    // old partition dirs are dropped at job commit). localCheckpoint
-    // cuts the lineage at the stored scan, so by the time the write
-    // job runs nothing reads wh — the merge stays O(delta + touched).
-    val merged = p15TouchedStored(spark, wh, touchedDays)
+    // old partition dirs are dropped at job commit). The stage cuts
+    // the lineage at the stored scan, so by the time the write job
+    // runs nothing reads wh — the merge stays O(delta + touched). The
+    // refresh owns its scope (it also runs inside st* foreachBatch
+    // threads), which frees the stage once the write lands.
+    val merged = Stages.materialize(p15TouchedStored(spark, wh, touchedDays)
       .unionByName(p15Agg(delta))
       .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"))
-      .localCheckpoint()
+      .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents")))
     merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("day").option("compression", "zstd").parquet(wh)
-    unpersistLocalCheckpoint(merged)
   }
 
   /** p15: INCREMENTAL MATERIALIZED-VIEW maintenance — the ETL
@@ -1767,7 +1766,7 @@ object Sinks {
         col("pk").cast("long").as("pk"), col("ver"),
         length(col("text")).cast("long").as("n_chars"))
     // materialized BEFORE compaction mutates the layout underneath
-    val mor = shape(p18Read(spark, root), "mor").localCheckpoint()
+    val mor = Stages.materialize(shape(p18Read(spark, root), "mor"))
     p18Compact(spark, root)
     val comp = shape(p18Read(spark, root), "compacted")
     mor.unionByName(comp).orderBy("phase", "doc_id")
@@ -1957,7 +1956,7 @@ object Sinks {
         col("pk").cast("long").as("pk"), col("ver"),
         length(col("text")).cast("long").as("n_chars"))
     // materialized BEFORE compaction mutates the layout underneath
-    val mor = shape(p21Read(spark, root), "mor").localCheckpoint()
+    val mor = Stages.materialize(shape(p21Read(spark, root), "mor"))
     p21Compact(spark, root)
     val comp = shape(p21Read(spark, root), "compacted")
     mor.unionByName(comp).orderBy("phase", "doc_id")
@@ -2018,7 +2017,7 @@ object Sinks {
       df.select(lit(phase).as("phase"), col("doc_id"),
         col("pk").cast("long").as("pk"), col("ver"),
         length(col("text")).cast("long").as("n_chars"))
-    val mor = shape(p22Read(spark, root), "mor").localCheckpoint()
+    val mor = Stages.materialize(shape(p22Read(spark, root), "mor"))
     // positional FIRST (file-granular, names preserved), equality
     // SECOND (bucket rewrites rename files) — see the scaladoc
     p21Compact(spark, root)

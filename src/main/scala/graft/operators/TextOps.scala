@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Stages, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.{functions => gf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -788,7 +788,7 @@ object TextOps {
   def t17QualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     val feats = t17Feats(spark, dir)
     val train = feats.filter(pmod(col("doc_id"), lit(T17TrainMod)) === 0)
-      .cache() // scanned once per GD round — the training-set cache
+      .cache() // scanned once per GD round; lazy pair, unpersisted below
     def z(w: Array[Long]) =
       (lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2") +
         lit(w(3)) * col("x3")) / lit(1e6)
@@ -901,7 +901,7 @@ object TextOps {
     * (w, n, seq) vocabulary frame; only the alphabet differs. */
   private[graft] def t06TrainLoop(seq0: DataFrame,
       merges: Int): (Seq[(Long, String, Long, Long)], DataFrame) = {
-    var seqDf = seq0.cache()
+    var seqDf = seq0.cache() // lazy pairs: each round frees the last
     val pairsOf = expr(
       "transform(sequence(1, size(split(trim(seq), '  ')) - 1), " +
         "i -> concat(element_at(split(trim(seq), '  '), i), ' ', " +
@@ -958,7 +958,7 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"), col("n_pieces"),
         expr("n_pieces * 10000 div n_tokens").as("pieces_per_token_bp"))
       .orderBy("doc_id")
-    val materialized = out.cache()
+    val materialized = out.cache() // the result; its caller owns it
     materialized.count()
     vocab.unpersist()
     materialized
@@ -1492,13 +1492,12 @@ object TextOps {
     // payloads"). A 64-bit collision could alias two distinct grams
     // (lossless-tier risk ~n²/2⁶⁴ per corpus); the BRUTE-FORCE oracle
     // re-proves no span was lost or invented at every gate SF.
-    val grams = toks.filter(size(col("w")) >= L)
+    val grams = Stages.materialize(toks.filter(size(col("w")) >= L)
       .select(col("doc_id"),
         explode(sequence(lit(1), size(col("w")) - lit(L - 1))).as("pos"),
         col("w"))
       .select(col("doc_id"), col("pos"),
-        xxhash64(concat_ws(" ", slice(col("w"), col("pos"), lit(L)))).as("h"))
-      .localCheckpoint()
+        xxhash64(concat_ws(" ", slice(col("w"), col("pos"), lit(L)))).as("h")))
     val census = grams.groupBy("h").agg(count(lit(1)).as("df"))
     val gdf = grams.join(census.hint("shuffle_hash"), Seq("h"))
     // winnowing: the rarest gram per window, leftmost on ties — a
@@ -1841,7 +1840,7 @@ object TextOps {
   private[graft] def t23TrainOver(spark: SparkSession, words0: DataFrame,
       rounds: Int): DataFrame = {
     import spark.implicits._
-    val words = words0.cache()
+    val words = words0.cache() // lazy pair, unpersisted after training
     val subs = words.select(col("n"), explode(expr(
         "flatten(transform(sequence(1, length(w)), i -> " +
           s"transform(sequence(1, least($T23MaxPiece, length(w) - i + 1)), " +

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Stages
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1223,8 +1224,8 @@ object StreamingOps {
     // long-lived session leak neither catalog entries nor files
     // (round-17 advice; the t18b base tables stay — they're the
     // memoized persisted index, released by t18b's own lifecycle)
-    val out = TextOps.t18bServeFrames(spark, tfAll, dlAll, dfFolded,
-      spark.read.parquet(s"$wh/st_b${latest.get()}")).localCheckpoint()
+    val out = Stages.materialize(TextOps.t18bServeFrames(spark, tfAll, dlAll,
+      dfFolded, spark.read.parquet(s"$wh/st_b${latest.get()}")))
     spark.sql(s"DROP TABLE IF EXISTS $ctfT")
     graft.core.IO.deleteRecursively(
       java.nio.file.Paths.get(s"$wh/tf_compact_$ctag"))
@@ -1338,12 +1339,13 @@ object StreamingOps {
           // vacuumed (st20 discipline); above it, the dir's _SUCCESS
           // (written last) is the marker
           if (batchId > commitLogHwm(spark, wh) &&
-              !fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS"))) {
+              !fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS"))) Stages.scoped {
+            // the batch owns its scope (this body runs on the stream's
+            // thread): the fwd stage is freed once upd_b lands
             nBatches.incrementAndGet()
             val delta = batch.select(col("vec_id"),
               col("embedding").cast("array<double>").as("e"))
-            val fwd = Similarity.s26FwdEdges(spark, delta, allFull, a)
-              .localCheckpoint()
+            val fwd = Stages.materialize(Similarity.s26FwdEdges(spark, delta, allFull, a))
             fwd.write.mode("overwrite").parquet(s"$wh/fwd_b$batchId")
             // current adjacency of the batch's touched nodes: base +
             // earlier folds, latest per src — delta-sized resolution

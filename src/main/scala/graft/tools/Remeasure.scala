@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prior-round archive, the remaining ambiguity is environmental: either
   * the plan regressed, or a contention window covered every in-process
   * rep (round 8's p01, round 9's st02 — both proved environmental only
-  * by a hand-run fresh-JVM TimeQ). This main IS that procedure, made
+  * by a hand-run fresh-JVM re-measurement). This main IS that procedure
+  * (run it by hand with the same args for a one-off check), made
   * mechanical: Bench spawns it as a child process (clean JVM: no heap
   * history, no page-cache aliasing with the suite, its own codegen
   * cache), it times a discarded warmup plus `reps` timed reps per query

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Stages
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -52,8 +53,8 @@ object S22AtScale {
 
     val sim = graft.operators.Similarity
     val (edges, buildSec) = time {
-      val g = sim.s22GraphAt(spark, full, cellTarget, probes, sim.S22Pool)
-        .localCheckpoint()
+      val g = Stages.materialize(
+        sim.s22GraphAt(spark, full, cellTarget, probes, sim.S22Pool))
       g.count()
       g
     }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Stages
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -54,15 +55,15 @@ object S25AtScale {
 
     val sim = graft.operators.Similarity
     val (g, buildSec) = time {
-      val g0 = sim.s22GraphAt(spark, full, cellTarget, probes, sim.S22Pool)
-        .localCheckpoint()
+      val g0 = Stages.materialize(
+        sim.s22GraphAt(spark, full, cellTarget, probes, sim.S22Pool))
       g0.count(); g0
     }
     val nRaw = g.count()
     val all = sim.emb(spark, full)
     val (pruned, pruneSec) = time {
-      val p = sim.s24PruneOver(g, all, sim.S24Degree)
-        .select(col("src_id"), col("dst_id")).localCheckpoint()
+      val p = Stages.materialize(sim.s24PruneOver(g, all, sim.S24Degree)
+        .select(col("src_id"), col("dst_id")))
       p.count(); p
     }
     val nPruned = pruned.count()
@@ -70,9 +71,8 @@ object S25AtScale {
     // trained (cached by twoLevelModel) — the gate discipline
     val (k1, k2) = sim.d12FactorsAt(n, cellTarget)
     val (cc, fc, assigned) = sim.twoLevelModel(spark, full, k1, k2, sim.LloydRounds)
-    val seed = sim.s23SeedOver(
-      sim.probeCells(spark, full, cc, fc, k2), assigned, sim.S23Beam)
-      .localCheckpoint()
+    val seed = Stages.materialize(sim.s23SeedOver(
+      sim.probeCells(spark, full, cc, fc, k2), assigned, sim.S23Beam))
     def serve(edges: org.apache.spark.sql.DataFrame): (Map[Long, Long], Double) = {
       val (rows, sec) = time {
         sim.s23Serve(spark, all, edges,

@@ -14,34 +14,9 @@ object GraftShims {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** Release the storage behind a localCheckpoint'ed Dataset.
-    *
-    * `Dataset.unpersist()` only talks to the CacheManager, so the
-    * MEMORY_AND_DISK blocks a localCheckpoint pins (its LogicalRDD)
-    * would otherwise live until the ContextCleaner happens to GC them —
-    * a leak across a long multi-query session. Iterative operators
-    * (Dedup.d07) call this on each superseded round.
-    */
-  def unpersistLocalCheckpoint(ds: Dataset[_]): Unit = ds match {
-    case c: org.apache.spark.sql.classic.Dataset[_] =>
-      // see through projections: callers may hand back a thin select
-      // over the checkpointed frame (e.g. connectedComponents' inner
-      // loop dropping its change flag) — the storage to release is
-      // still the LogicalRDD underneath
-      def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project => strip(pr.child)
-        case o => o
-      }
-      strip(c.queryExecution.analyzed) match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-    case _ => ()
-  }
-
   /** Re-root a checkpointed Dataset on its materialized RDD with FRESH
-    * default statistics.
+    * default statistics. The RDD is reused as is, so the stage's
+    * lifecycle stays with `graft.core.Stages`, which tracks it by RDD id.
     *
     * `localCheckpoint()` truncates lineage but PRESERVES the original
     * plan's sizeInBytes estimate on the LogicalRDD. In an iterative
