@@ -243,7 +243,11 @@ object Bench {
       if (quiet) windowExecLevel(org.apache.logging.log4j.Level.ERROR)
       try Some(time(force(fn(spark, sfDir))))
       catch { case _: Throwable => None }
-      finally if (quiet) windowExecLevel(org.apache.logging.log4j.Level.WARN)
+      finally {
+        // untimed: the result is forced, so free what it still held
+        Stages.releaseSurvivors()
+        if (quiet) windowExecLevel(org.apache.logging.log4j.Level.WARN)
+      }
     }
     // Queries + raw operators share one interleaved schedule: each PASS
     // visits every query once, in a per-pass SEEDED-RANDOM order
@@ -431,6 +435,7 @@ object Bench {
       Seq("s11_persisted_ivf_pq" -> s11, "s12_ivf_pq_foldin" -> s12,
         "s21_persisted_binary" -> s21, "s23_graph_search" -> s23)
     }
+    Stages.releaseSurvivors() // the phase splits' stores, outside any scope
 
     // ---- LSH band-bucket cap census ----
     // the hot-bucket caps skip oversized buckets; the skip counts are

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Stages, Tables}
+import graft.core.{Stages, Stores, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.{functions => gf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -595,7 +595,6 @@ object Dedup {
     verifyJaccard(cands, shingled(spark, dir))
   }
 
-  private[graft] val D13Buckets = 16
   private[graft] val D13CanaryResidue = 113L
 
   /** (doc_id, sh) distinct word-3-gram rows over an explicit corpus —
@@ -607,8 +606,7 @@ object Dedup {
       .filter(size(col("sh")) > 0)
 
   /** Build the PERSISTED dedup index over a corpus — the ingest-time
-    * half of d13. Two catalog tables (UUID-named, p03's
-    * concurrent-caller rationale):
+    * half of d13. Two [[graft.core.Stores]] stores:
     *
     *  - band postings (doc_id, band, bh), BUCKETED by (band, bh) and
     *    sorted within buckets: the candidate join's corpus side reads
@@ -625,19 +623,11 @@ object Dedup {
     */
   private[graft] def d13BuildIndex(
       spark: SparkSession, corpus: DataFrame): (String, String) = {
-    val wh = graft.core.IO.scratchDir("graft-d13")
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val bandT = s"graft_d13_bands_$tag"
-    val shT = s"graft_d13_shingles_$tag"
     val sh = shingledOf(corpus)
     val bands = capBandBuckets(minhashBandsOf(sh), Seq("band", "bh"),
       bandCap(corpus.count()))
-    bands.write.mode("overwrite").format("parquet")
-      .bucketBy(D13Buckets, "band", "bh").sortBy("band", "bh")
-      .option("path", s"$wh/bands_$tag").saveAsTable(bandT)
-    sh.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/shingles_$tag").saveAsTable(shT)
-    (bandT, shT)
+    (Stores.land(bands, "d13_bands", "band", "bh"),
+      Stores.land(sh, "d13_shingles"))
   }
 
   /** The per-batch half of d13: dedup a DELTA batch against the
@@ -673,10 +663,9 @@ object Dedup {
 
   /** Fold a deduped delta INTO the persisted index — the tail of the
     * production ingest cycle (build once → per batch: dedup, then
-    * fold). Appends the delta's band postings with the identical
-    * (band, bh) bucketing (Spark validates the bucket spec against
-    * the catalog) and its shingle sets to the store; the next batch
-    * then dedups against corpus ∪ delta without any recompute of
+    * fold). Appends the delta's band postings under the index's
+    * (band, bh) bucketing and its shingle sets to the store; the next
+    * batch then dedups against corpus ∪ delta without any recompute of
     * either. Exercised by ScalaTest; the GATE query deliberately does
     * not fold — its result must be independent of evaluation order,
     * and an append racing the lazy result evaluation would let the
@@ -688,10 +677,9 @@ object Dedup {
     // corpus doc) and cap the delta's postings against the PERSISTED
     // occupancy, so no bucket ever grows past it across fold-ins
     val cap = bandCap(spark.table(shT).count() + dsh.count())
-    capDeltaAgainstIndex(spark, minhashBandsOf(dsh), bandT, Seq("band", "bh"), cap)
-      .write.mode("append").format("parquet")
-      .bucketBy(D13Buckets, "band", "bh").sortBy("band", "bh").saveAsTable(bandT)
-    dsh.write.mode("append").format("parquet").saveAsTable(shT)
+    Stores.append(bandT,
+      capDeltaAgainstIndex(spark, minhashBandsOf(dsh), bandT, Seq("band", "bh"), cap))
+    Stores.append(shT, dsh)
   }
 
   /** d13: INCREMENTAL (delta-vs-index) dedup — the production ingest

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Stages, Tables}
+import graft.core.{Stages, Stores, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1252,8 +1252,8 @@ object Multimodal {
 
   /** Build the PERSISTED media-dedup index over a corpus — d13's
     * ingest-time pattern applied to m05's hash space (round-11 verdict
-    * item 4). Two tables, each bucketed so batch-time joins read them
-    * exchange-free:
+    * item 4). Two [[graft.core.Stores]] stores, each bucketed so
+    * batch-time joins read them exchange-free:
     *
     *  - dHash band postings (media_id, phash, band, bh), BUCKETED by
     *    (band, bh) and sorted within buckets — the near-dup candidate
@@ -1276,23 +1276,13 @@ object Multimodal {
   private[graft] def m08BuildIndex(
       spark: SparkSession, corpus: DataFrame,
       cap: Boolean = true): (String, String) = {
-    val wh = graft.core.IO.scratchDir("graft-m08")
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val bandT = s"graft_m08_bands_$tag"
-    val contT = s"graft_m08_content_$tag"
     val hashed = perceptualHashes(spark, corpus)
     val rawBands = dhashBands(hashed.filter(col("method") === "dhash"))
     val bands = if (cap) Dedup.capBandBuckets(
       rawBands, Seq("band", "bh"), Dedup.bandCap(corpus.count())) else rawBands
-    bands.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "band", "bh").sortBy("band", "bh")
-      .option("path", s"$wh/bands_$tag").saveAsTable(bandT)
-    hashed.filter(col("method") === "content")
-      .select(col("media_id"), col("phash"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "phash").sortBy("phash")
-      .option("path", s"$wh/content_$tag").saveAsTable(contT)
-    (bandT, contT)
+    (Stores.land(bands, "m08_bands", "band", "bh"),
+      Stores.land(hashed.filter(col("method") === "content")
+        .select(col("media_id"), col("phash")), "m08_content", "phash"))
   }
 
   /** The per-batch half of m08: dedup a DELTA batch of payloads against
@@ -1357,11 +1347,11 @@ object Multimodal {
 
   /** Fold a deduped delta INTO the persisted media index — the tail of
     * the ingest cycle ([[graft.operators.Dedup.d13FoldIn]]'s twin):
-    * the delta's band postings and content rows append with the
-    * IDENTICAL bucketing (Spark validates the spec against the
-    * catalog), so the next batch dedups against corpus ∪ delta with no
-    * recompute of either. Exercised by MultimodalSpec; the GATE
-    * deliberately does not fold (d13's evaluation-order argument). */
+    * the delta's band postings and content rows append under the
+    * index's own bucketing, so the next batch dedups against
+    * corpus ∪ delta with no recompute of either. Exercised by
+    * MultimodalSpec; the GATE deliberately does not fold (d13's
+    * evaluation-order argument). */
   private[graft] def m08FoldIn(spark: SparkSession, delta: DataFrame,
       bandT: String, contT: String): Unit = {
     val hashed = perceptualHashes(spark, delta)
@@ -1372,17 +1362,11 @@ object Multimodal {
     val cap = Dedup.bandCap(
       spark.table(bandT).count() / M05Bands + spark.table(contT).count() +
         delta.count())
-    Dedup.capDeltaAgainstIndex(spark,
-        dhashBands(hashed.filter(col("method") === "dhash")),
-        bandT, Seq("band", "bh"), cap)
-      .write.mode("append").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "band", "bh").sortBy("band", "bh")
-      .saveAsTable(bandT)
-    hashed.filter(col("method") === "content")
-      .select(col("media_id"), col("phash"))
-      .write.mode("append").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "phash").sortBy("phash")
-      .saveAsTable(contT)
+    Stores.append(bandT, Dedup.capDeltaAgainstIndex(spark,
+      dhashBands(hashed.filter(col("method") === "dhash")),
+      bandT, Seq("band", "bh"), cap))
+    Stores.append(contT, hashed.filter(col("method") === "content")
+      .select(col("media_id"), col("phash")))
   }
 
   /** m08: INCREMENTAL media dedup — the d13 ingest cycle for binary

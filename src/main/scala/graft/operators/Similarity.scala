@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Stages, Tables}
+import graft.core.{Stages, Stores, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1390,26 +1390,14 @@ object Similarity {
     * corpus is scanned/encoded EXACTLY once, at ingest. */
   private[graft] def s11BuildIndex(
       spark: SparkSession, dir: String): (String, String, String, String) = {
-    val wh = graft.core.IO.scratchDir("graft-s11")
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val (codesT, ccT, fcT, cbT) = (s"graft_s11_codes_$tag", s"graft_s11_cc_$tag",
-      s"graft_s11_fc_$tag", s"graft_s11_cb_$tag")
     val (k1, k2) = d12Factors(Tables(spark, dir, "embeddings").count())
     val (ccents, fcents, assigned) = twoLevelModel(spark, dir, k1, k2, LloydRounds)
     val cb = s07Codebooks(spark, dir, S07Rounds)
     val codesByCell = s07Encode(subvecs(spark, dir), cb)
       .select(col("vec_id"), col("sub"), col("cid").as("code"))
       .join(assigned.select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-    codesByCell.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-      .option("path", s"$wh/codes_$tag").saveAsTable(codesT)
-    ccents.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/cc_$tag").saveAsTable(ccT)
-    fcents.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/fc_$tag").saveAsTable(fcT)
-    cb.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/cb_$tag").saveAsTable(cbT)
-    (codesT, ccT, fcT, cbT)
+    (Stores.land(codesByCell, "s11_codes", "cell"), Stores.land(ccents, "s11_cc"),
+      Stores.land(fcents, "s11_fc"), Stores.land(cb, "s11_cb"))
   }
 
   /** s11: IVF-PQ search against the PERSISTED index — the serving face
@@ -1448,8 +1436,9 @@ object Similarity {
   /** [[s11Search]] over explicit artifact FRAMES — the cross-session
     * seam: a fresh process reads the landed parquet paths directly
     * (no catalog entry anywhere) and serves the identical plan; the
-    * bucketed-table form above keeps the metastore bucket spec for
-    * in-session consumers. */
+    * table form above serves the live [[graft.core.Stores]] stores,
+    * whose catalog entries carry the bucket spec for in-session
+    * consumers. */
   private[graft] def s11SearchFrames(spark: SparkSession, dir: String,
       codes: DataFrame, cc: DataFrame, fc: DataFrame, cb: DataFrame,
       k2: Int, tomb: Option[DataFrame] = None): DataFrame = {
@@ -1517,8 +1506,8 @@ object Similarity {
   /** Fold a delta batch INTO the persisted IVF-PQ index — the tail of
     * the retrieval-side ingest cycle and d13/m08's fold-in discipline
     * applied to the code store (round-12 verdict item 1): the delta's
-    * cell-keyed codes append with the IDENTICAL cell bucketing (Spark
-    * validates the spec against the catalog), so the next query batch
+    * cell-keyed codes append under the store's own cell bucketing
+    * ([[graft.core.Stores.append]]), so the next query batch
     * searches corpus ∪ delta with zero recompute of either and the
     * bucketed serve path ([[s11Search]]) keeps its zero-exchange
     * property over the folded store. The stored centroids/codebooks
@@ -1527,10 +1516,7 @@ object Similarity {
     * base (what [[s12OracleSql]] states). */
   private[graft] def s12FoldIn(spark: SparkSession, delta: DataFrame,
       codesT: String, ccT: String, fcT: String, cbT: String, k2: Int): Unit =
-    s12AssignEncode(spark, delta, ccT, fcT, cbT, k2)
-      .write.mode("append").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-      .saveAsTable(codesT)
+    Stores.append(codesT, s12AssignEncode(spark, delta, ccT, fcT, cbT, k2))
 
   /** The BUILD half of the s12 gate: persist the IVF-PQ index over the
     * BASE slice (vec_id < n·[[S12BaseNum]]/[[S12BaseDen]]) — the base
@@ -1583,42 +1569,24 @@ object Similarity {
     * into every bucket (and the base build itself writes one file per
     * writing task per bucket), so after many ingest cycles a bucket is
     * a pile of slivers and the serve scan's open/seek overhead grows
-    * with ingest COUNT rather than data size. Compaction reads each
-    * bucket back as ONE partition (the bucketed scan is forced on via
-    * `autoBucketedScan.enabled=false` — with no join in the plan Spark
-    * would otherwise fall back to size-split reads and the rewrite
-    * would re-fragment) and rewrites it as exactly one sorted file,
-    * with ZERO exchange: the scan's bucket partitioning already
+    * with ingest COUNT rather than data size. [[graft.core.Stores.compact]]
+    * reads each bucket back as ONE partition (with no join in the plan
+    * Spark would otherwise fall back to size-split reads and the
+    * rewrite would re-fragment) and rewrites it as exactly one sorted
+    * file, with ZERO exchange: the scan's bucket partitioning already
     * matches the writer's spec, so the whole rewrite is a per-bucket
     * local sort + stream (PlanSpec pins no-Exchange; OperatorSpec pins
-    * files-after == [[graft.operators.Dedup.D13Buckets]] < files-
-    * before). At 100 TB this is the compaction job a storage service
+    * files-after ≤ [[graft.core.Stores.Buckets]] < files-before). At 100 TB this is the compaction job a storage service
     * schedules off-peak — O(store) sequential I/O, no shuffle, and
     * queries keep working against the old table until the new one
     * swaps in (the rewrite lands under a fresh name, never in place). */
   private[graft] def s13Compact(spark: SparkSession, codesT: String,
-      drop: Option[DataFrame] = None): String = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outT = s"graft_s13_codes_$tag"
-    val wh = graft.core.IO.scratchDir("graft-s13")
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      // purge face (s16): tombstoned ids drop during the rewrite via a
-      // broadcast anti-join riding the bucketed scan — partitioning is
-      // preserved, so the no-exchange rewrite property holds unchanged
-      drop.fold(spark.table(codesT))(t => spark.table(codesT)
-          .join(broadcast(t.select("vec_id")), Seq("vec_id"), "left_anti"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(Dedup.D13Buckets, "cell").sortBy("cell")
-        .option("path", s"$wh/codes_$tag").saveAsTable(outT)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-    outT
-  }
+      drop: Option[DataFrame] = None): String =
+    // purge face (s16): tombstoned ids drop during the rewrite via a
+    // broadcast anti-join riding the bucketed scan — partitioning is
+    // preserved, so the no-exchange rewrite property holds unchanged
+    Stores.compact(codesT, codes => drop.fold(codes)(t =>
+      codes.join(broadcast(t.select("vec_id")), Seq("vec_id"), "left_anti")))
 
   /** s13: serve over the COMPACTED store — the full lifecycle gate
     * (build base → fold delta → compact → search). Compaction is pure
@@ -1659,14 +1627,8 @@ object Similarity {
     * Lucene/Milvus soft-delete discipline; FAISS's eager
     * `remove_ids()` rewrite is what this avoids at 100 TB). */
   private[graft] def s16PersistTombstones(spark: SparkSession,
-      tomb: DataFrame): String = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outT = s"graft_s16_tomb_$tag"
-    val wh = graft.core.IO.scratchDir("graft-s16")
-    tomb.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/tomb_$tag").saveAsTable(outT)
-    outT
-  }
+      tomb: DataFrame): String =
+    Stores.land(tomb, "s16_tomb")
 
   /** s16: DELETES on the persisted IVF-PQ index — the one CRUD verb
     * the retrieval lifecycle still lacked (s11 build, s12 add, s13
@@ -2405,7 +2367,7 @@ object Similarity {
   /** One PERSISTED graph store per (context, dir, params) — the
     * deploy amortization (the graph is built once and served many;
     * s23/s24/s25/s26/s27/s28/e06/e07 all consume it). The memo holds
-    * only the (table, path) NAMES of a src-bucketed parquet artifact —
+    * only the table NAME of a src-bucketed parquet artifact —
     * round-16 closed this family's lifecycle asymmetry: every other
     * index tier (s11 codes, s21 signatures, t18b postings, m08 media)
     * already served from stored files, while the graph lived in a
@@ -2425,23 +2387,17 @@ object Similarity {
     * a metastore table is just as invisible to plan matching as the
     * checkpoint was. */
   private val s22Memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Int, Int), (String, String)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Int, Int), String]()
 
   /** Land a finished graph frame as the src-bucketed stored artifact —
-    * [[Dedup.D13Buckets]] buckets on src_id, rows sorted (src_id, rnk)
-    * within each bucket (the s11/s13 layout discipline: serve-side
-    * frontier joins hit one bucket per src, and a bucketed scan
-    * satisfies any later src-keyed window/compaction with no
-    * exchange). Returns (table, path). */
+    * a [[graft.core.Stores]] store bucketed and sorted on src_id (the
+    * s11/s13 layout discipline: serve-side frontier joins hit one
+    * bucket per src, and a bucketed scan satisfies any later src-keyed
+    * window/compaction with no exchange). Returns (table, path). */
   private[graft] def s29LandGraphStore(spark: SparkSession,
       graph: DataFrame): (String, String) = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outT = s"graft_s29_graph_$tag"
-    val path = s"${graft.core.IO.scratchDir("graft-s29")}/graph_$tag"
-    graph.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "src_id").sortBy("src_id", "rnk")
-      .option("path", path).saveAsTable(outT)
-    (outT, path)
+    val t = Stores.land(graph, "s29_graph", "src_id")
+    (t, Stores.path(t))
   }
 
   /** [[s22KnnGraph]] at explicit (cellTarget, fineProbes, pool) — the
@@ -2453,20 +2409,18 @@ object Similarity {
     spark.table(s22StoreAt(spark, dir, cellTarget, fineProbes, pool)._1)
 
   /** The stored artifact's (table, path) for explicit params —
-    * building it on first request. */
+    * building it on first request. The memo owns the store
+    * ([[graft.core.Stores.keep]]): no query scope drops it, and
+    * [[releaseGraphStores]] releases it. */
   private[graft] def s22StoreAt(spark: SparkSession, dir: String,
-      cellTarget: Long, fineProbes: Int, pool: Int): (String, String) =
-    s22Memo.computeIfAbsent(
+      cellTarget: Long, fineProbes: Int, pool: Int): (String, String) = {
+    val t = s22Memo.computeIfAbsent(
       (spark.sparkContext.applicationId, dir, cellTarget, fineProbes, pool),
-      _ => s29LandGraphStore(spark,
-        s22GraphPlanAt(spark, dir, cellTarget, fineProbes, pool)))
+      _ => Stores.keep(s29LandGraphStore(spark,
+        s22GraphPlanAt(spark, dir, cellTarget, fineProbes, pool))._1))
+    (t, Stores.path(t))
+  }
 
-  /** Release every memoized graph artifact (and the shared s26 base
-    * build): drops the metastore tables and clears the memos, so a
-    * long-lived session holds NOTHING for the graph family after its
-    * last consumer — the round-16 advice's eviction path. The parquet
-    * files live in scratch dirs that self-delete at JVM exit; a later
-    * caller simply rebuilds. */
   /** (graph-store memo entries, s26 base-build memo entries) — the
     * release spec's observability seam. */
   private[graft] def graphMemoSizes: (Int, Int) = (s22Memo.size, s26Memo.size)
@@ -2486,23 +2440,23 @@ object Similarity {
   private[graft] def transientPinCount: Int = Stages.survivorCount
 
   /** Release every graph artifact THIS application holds: drop the
-    * memoized graph-store tables, unpersist the s26 base builds'
-    * checkpointed edge sets, and drain the stage survivors (the serve
-    * faces' edge stages among them, see [[servedOverEdges]]) — so a
-    * long-lived session holds NOTHING for the graph family after its
-    * last consumer (the round-16 advice's eviction path, completed per
-    * round-17 advice: gBase was abandoned still-pinned, and other
-    * applications' memo entries were dropped without their tables).
-    * Entries keyed by OTHER applicationIds stay memoized — their
-    * owners release them. The parquet files live in scratch dirs that
-    * self-delete at JVM exit; a later caller simply rebuilds. */
+    * memoized graph stores ([[graft.core.Stores.drop]]), unpersist the
+    * s26 base builds' checkpointed edge sets, and drain the scope
+    * survivors (the serve faces' edge stages among them, see
+    * [[servedOverEdges]]) — so a long-lived session holds NOTHING for
+    * the graph family after its last consumer (the round-16 advice's
+    * eviction path, completed per round-17 advice: gBase was abandoned
+    * still-pinned, and other applications' memo entries were dropped
+    * without their tables). Entries keyed by OTHER applicationIds stay
+    * memoized — their owners release them. A later caller simply
+    * rebuilds. */
   private[graft] def releaseGraphStores(spark: SparkSession): Unit = {
     val app = spark.sparkContext.applicationId
     val sIt = s22Memo.entrySet().iterator()
     while (sIt.hasNext) {
       val e = sIt.next()
       if (e.getKey._1 == app) {
-        spark.sql(s"DROP TABLE IF EXISTS ${e.getValue._1}")
+        Stores.drop(e.getValue)
         sIt.remove()
       }
     }
@@ -3532,29 +3486,22 @@ object Similarity {
     * folds accumulate). Rows: (src_id, ver, rnk, dst_id, c). */
   private[graft] def s30LandVersioned(spark: SparkSession,
       base: DataFrame): (String, String) = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outT = s"graft_s30_ver_$tag"
-    val path = s"${graft.core.IO.scratchDir("graft-s30")}/ver_$tag"
-    base.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "src_id").sortBy("src_id", "ver", "rnk")
-      .option("path", path).saveAsTable(outT)
-    (outT, path)
+    val t = Stores.land(base, "s30_ver", "src_id")
+    (t, Stores.path(t))
   }
 
-  /** Append one fold's rows to the versioned store with the IDENTICAL
+  /** Append one fold's rows to the versioned store under its own
     * bucket spec (the s12FoldIn discipline on edges): a delta-sized
     * bucket-compatible append — the stored base is never read, never
     * rewritten. */
   private[graft] def s30Append(verT: String, fold: DataFrame): Unit =
-    fold.write.mode("append").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "src_id").sortBy("src_id", "ver", "rnk")
-      .saveAsTable(verT)
+    Stores.append(verT, fold)
 
   /** s30's COMPACTION JOB: fold the versioned store's base + append
     * slivers into a fresh store holding exactly the CURRENT adjacency
     * — one sorted file per bucket, with ZERO exchange. The bucketed
-    * scan is forced on (`autoBucketedScan.enabled=false`, the s13
-    * rule), so its HashPartitioning(src_id) already satisfies the
+    * scan is forced on ([[graft.core.Stores.compact]], the s13 rule),
+    * so its HashPartitioning(src_id) already satisfies the
     * latest-version-per-src window's required distribution — the
     * resolve is a per-bucket local sort + filter, and the rewrite
     * under the identical bucket spec streams each bucket-partition to
@@ -3569,22 +3516,8 @@ object Similarity {
     * Returns (table, path). */
   private[graft] def s30Compact(spark: SparkSession,
       verT: String): (String, String) = {
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val outT = s"graft_s30_comp_$tag"
-    val path = s"${graft.core.IO.scratchDir("graft-s30")}/comp_$tag"
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      s30Resolve(spark, verT)
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(Dedup.D13Buckets, "src_id").sortBy("src_id", "rnk")
-        .option("path", path).saveAsTable(outT)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-    (outT, path)
+    val t = Stores.compact(verT, latestPerSrc)
+    (t, Stores.path(t))
   }
 
   /** The compaction's resolve half — latest version per src over the
@@ -3592,10 +3525,12 @@ object Similarity {
     * ClusteredDistribution(src_id) is already satisfied by the store's
     * HashPartitioning, so this plans with ZERO exchange (PlanSpec pins
     * it) — the whole compaction is per-bucket local work. */
-  private[graft] def s30Resolve(spark: SparkSession, verT: String): DataFrame = {
+  private[graft] def s30Resolve(spark: SparkSession, verT: String): DataFrame =
+    latestPerSrc(spark.table(verT))
+
+  private def latestPerSrc(versions: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("src_id"))
-    spark.table(verT)
-      .withColumn("mx", max(col("ver")).over(w))
+    versions.withColumn("mx", max(col("ver")).over(w))
       .filter(col("ver") === col("mx")).drop("mx")
   }
 
@@ -3607,18 +3542,12 @@ object Similarity {
     * frame must expose (src_id, rnk, dst_id, c); `versions` tags carry
     * the latest-wins order. */
   private[graft] def s30CompactFrames(spark: SparkSession,
-      versions: Seq[(DataFrame, Long)]): (String, String) = {
-    val tagged = versions.map { case (df, t) =>
+      versions: Seq[(DataFrame, Long)]): (String, String) =
+    s30LandVersioned(spark, latestPerSrc(versions.map { case (df, t) =>
       df.select(col("src_id"), lit(t).as("ver"),
         col("rnk").cast("long").as("rnk"), col("dst_id"),
         col("c").cast("double").as("c"))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("src_id"))
-    val (outT, path) = s30LandVersioned(spark, tagged
-      .withColumn("mx", max(col("ver")).over(w))
-      .filter(col("ver") === col("mx")).drop("mx"))
-    (outT, path)
-  }
+    }.reduce(_ unionByName _)))
 
   /** s30: GRAPH-STORE COMPACTION — the full lifecycle gate (build base
     * graph → land versioned store → fold one delta batch in → COMPACT
@@ -3631,8 +3560,8 @@ object Similarity {
     * srcs the upd face. Compaction is pure physical-layout
     * maintenance, so the oracle IS [[s26OracleSql]] VERBATIM: one edge
     * lost, duplicated, or mis-versioned during the rewrite and the
-    * hash gate breaks. OperatorSpec additionally pins files-after ==
-    * [[Dedup.D13Buckets]] < files-before and that the compacted
+    * hash gate breaks. OperatorSpec additionally pins files-after ≤
+    * [[graft.core.Stores.Buckets]] < files-before and that the compacted
     * CURRENT adjacency equals the merge-on-read resolution
     * frame-for-frame; PlanSpec pins the no-exchange rewrite. */
   def s30CompactedGraphStore(spark: SparkSession, dir: String): DataFrame = {

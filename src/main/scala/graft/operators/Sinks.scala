@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Stages, Tables}
+import graft.core.{Stages, Stores, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -827,8 +827,9 @@ object Sinks {
       .orderBy("event_id")
   }
 
-  /** p03: BUCKETED co-located join — both sides written bucketed by the
-    * join key (8 buckets, bucket-sorted), then joined with NO exchange:
+  /** p03: BUCKETED co-located join — both sides land as
+    * [[graft.core.Stores]] bucketed by the join key (bucket-sorted,
+    * per-call unique tables), then joined with NO exchange:
     * the bucketed scans satisfy the join's distribution requirement
     * directly, so the only shuffle in the whole plan is the final
     * orderBy (pinned in PlanSpec). This is the pre-partitioning story
@@ -838,23 +839,11 @@ object Sinks {
     * read-time answer to skew, p03 the write-time answer to repeated
     * joins. */
   def p03BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val wh = graft.core.IO.scratchDir("graft-bucket")
-    // per-call unique table names: bucketBy requires catalog tables,
-    // and a FIXED name would make concurrent callers on one session
-    // clobber each other's data mid-query (catalog entries are
-    // in-memory and session-scoped, so uniqueness costs nothing)
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val evT = s"graft_events_bucketed_$tag"
-    val puT = s"graft_peruser_bucketed_$tag"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("value"))
-    ev.write.mode("overwrite").format("parquet")
-      .bucketBy(8, "user_id").sortBy("user_id")
-      .option("path", s"$wh/events_b").saveAsTable(evT)
-    ev.groupBy(col("user_id")).agg(avg(col("value")).as("user_avg"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(8, "user_id").sortBy("user_id")
-      .option("path", s"$wh/peruser_b").saveAsTable(puT)
+    val evT = Stores.land(ev, "p03_events", "user_id")
+    val puT = Stores.land(ev.groupBy(col("user_id")).agg(avg(col("value")).as("user_avg")),
+      "p03_peruser", "user_id")
     // merge hint: at the toy gate SFs the planner would broadcast the
     // per-user side (correct there, impossible at 100 TB where both
     // sides are fact-sized) and skip the bucketed scans entirely; the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Stages, Tables}
+import graft.core.{Stages, Stores, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.{functions => gf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1250,26 +1250,16 @@ object TextOps {
     * st17 seam (the streaming leg builds over the base slice only). */
   private[graft] def t18bBuildIndexOver(
       spark: SparkSession, d: DataFrame): (String, String, String, String) = {
-    val wh = graft.core.IO.scratchDir("graft-t18b")
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tfT, dlT, dfT, stT) = (s"graft_t18b_tf_$tag", s"graft_t18b_dl_$tag",
-      s"graft_t18b_df_$tag", s"graft_t18b_st_$tag")
     val toks = d
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    tf.write.mode("overwrite").format("parquet")
-      .bucketBy(Dedup.D13Buckets, "term").sortBy("term")
-      .option("path", s"$wh/tf_$tag").saveAsTable(tfT)
+    val tfT = Stores.land(toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
+      "t18b_tf", "term")
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    dl.write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/dl_$tag").saveAsTable(dlT)
-    spark.table(tfT).groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/df_$tag").saveAsTable(dfT)
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$wh/st_$tag").saveAsTable(stT)
-    (tfT, dlT, dfT, stT)
+    val dlT = Stores.land(dl, "t18b_dl")
+    val dfT = Stores.land(spark.table(tfT).groupBy("term").agg(count(lit(1)).as("df")),
+      "t18b_df")
+    (tfT, dlT, dfT,
+      Stores.land(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot")), "t18b_st"))
   }
 
   /** The SERVE half: a query batch against the ALREADY-persisted index
@@ -1283,8 +1273,10 @@ object TextOps {
       spark.table(dfT), spark.table(stT))
 
   /** [[t18bServe]] over explicit index frames — the st17 seam: the
-    * streaming fold serves its version-addressed df/stats dirs through
-    * the IDENTICAL scoring plan. */
+    * streaming fold serves its compacted postings store and its
+    * version-addressed df/stats dirs through the IDENTICAL scoring
+    * plan. The index tables are [[graft.core.Stores]] stores, released
+    * by the query scope that landed them. */
   private[graft] def t18bServeFrames(spark: SparkSession, tf: DataFrame,
       dl: DataFrame, df: DataFrame, st: DataFrame): DataFrame = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Stages
+import graft.core.{Stages, Stores}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1210,25 +1210,18 @@ object StreamingOps {
     // artifact instead of a union of unbucketed delta dirs over the
     // bucketed base — the silent layout regression the round-16
     // advice named, closed the same way st18's adjacency folds were
-    val ctag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val ctfT = s"graft_st17_tf_$ctag"
-    (spark.table(tfT) +: deltas("tf")).reduce(_ unionByName _)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(graft.operators.Dedup.D13Buckets, "term").sortBy("term")
-      .option("path", s"$wh/tf_compact_$ctag").saveAsTable(ctfT)
-    val tfAll = spark.table(ctfT)
     val dlAll = (spark.table(dlT) +: deltas("dl")).reduce(_ unionByName _)
     val dfFolded = spark.read.parquet(s"$wh/df_b${latest.get()}")
-    // the serve result is query-bounded — materialize it, then DROP
-    // the per-run compaction table so repeated gate runs in a
-    // long-lived session leak neither catalog entries nor files
-    // (round-17 advice; the t18b base tables stay — they're the
-    // memoized persisted index, released by t18b's own lifecycle)
-    val out = Stages.materialize(TextOps.t18bServeFrames(spark, tfAll, dlAll,
-      dfFolded, spark.read.parquet(s"$wh/st_b${latest.get()}")))
-    spark.sql(s"DROP TABLE IF EXISTS $ctfT")
-    graft.core.IO.deleteRecursively(
-      java.nio.file.Paths.get(s"$wh/tf_compact_$ctag"))
+    // the serve result is query-bounded — materialize it in its own
+    // scope, whose exit drops the per-run compaction store (the result
+    // stage no longer reads it), so repeated gate runs in a long-lived
+    // session leak neither catalog entries nor files (round-17 advice)
+    val out = Stages.scoped {
+      val tfAll = spark.table(Stores.land(
+        (spark.table(tfT) +: deltas("tf")).reduce(_ unionByName _), "st17_tf", "term"))
+      Stages.materialize(TextOps.t18bServeFrames(spark, tfAll, dlAll,
+        dfFolded, spark.read.parquet(s"$wh/st_b${latest.get()}")))
+    }
     // retention (st20 discipline): df/st versions are CUMULATIVE, so
     // everything below the latest is superseded — mark + vacuum them.
     // The tf/dl delta dirs are NOT superseded (they are live

@@ -8,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * time to Spark JOBS — prints one line per job (start-relative offset,
   * duration, #stages, #tasks, total task time, description head) plus a
   * per-query summary of scheduled-job wall vs gaps (driver-side time:
-  * planning, metastore ops, file moves, non-Spark work).
+  * planning, metastore ops, file moves, non-Spark work). Stages map to
+  * jobs by the job-start event's stage ids; job wall is the union of
+  * job intervals, so overlapping AQE and broadcast jobs count once.
   *
   * Usage:
   *   java -cp ... graft.tools.ProfileQ <sfDir> <query names...>
@@ -31,8 +33,12 @@ object ProfileQ {
         var nStages: Int = 0, var nTasks: Int = 0, var taskMs: Long = 0L,
         desc: String)
     val jobs = new scala.collection.concurrent.TrieMap[Int, JobRec]()
+    // a stage runs under the first job that lists it; later jobs that
+    // reuse its shuffle output list it too, but skip it
+    val stageJob = new scala.collection.concurrent.TrieMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
         val d = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(Option(e.properties)
@@ -44,9 +50,7 @@ object ProfileQ {
         jobs.get(e.jobId).foreach(_.end = e.time)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        // attribute the stage to whichever job is still open (local mode
-        // runs gate queries sequentially, so the open-job heuristic holds)
-        jobs.values.toSeq.sortBy(-_.start).find(j => j.end < 0).foreach { j =>
+        stageJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
           j.nStages += 1
           j.nTasks += si.numTasks
           j.taskMs += si.taskMetrics.executorRunTime
@@ -66,21 +70,26 @@ object ProfileQ {
           try once(fn) catch { case e: Throwable =>
             println(s"WARMUP FAIL $name: ${e.getMessage}") }
           jobs.clear()
+          stageJob.clear()
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.currentTimeMillis()
           val sec = try once(fn) catch { case e: Throwable =>
             println(s"RUN FAIL $name: ${e.getMessage}"); -1.0 }
-          // let straggling listener events drain
-          Thread.sleep(300)
+          org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
           spark.sparkContext.removeSparkListener(listener)
           val rows = jobs.values.toSeq.sortBy(_.start)
           println(f"PROFILE $name total=$sec%.3f s  jobs=${rows.size}")
+          // covered = the union of job intervals: cursor is the end of
+          // the union so far, and only the part past it adds
           var covered = 0L
           var cursor = t0
           for (j <- rows) {
             val dur = if (j.end > 0) j.end - j.start else -1
             val gap = j.start - cursor
-            if (j.end > 0) { covered += dur; cursor = math.max(cursor, j.end) }
+            if (j.end > 0) {
+              covered += math.max(0L, j.end - math.max(j.start, cursor))
+              cursor = math.max(cursor, j.end)
+            }
             println(f"  job=${j.id}%4d off=${(j.start - t0) / 1000.0}%7.2f gapBefore=${gap / 1000.0}%6.2f dur=${dur / 1000.0}%6.2f stages=${j.nStages}%3d tasks=${j.nTasks}%5d taskSec=${j.taskMs / 1000.0}%7.2f  ${j.desc.take(80)}")
           }
           println(f"  SUMMARY jobWall=${covered / 1000.0}%.2f s  driverGaps=${math.max(0.0, sec - covered / 1000.0)}%.2f s")

@@ -14,6 +14,11 @@ object GraftShims {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far has reached every listener
+    * (the listener bus is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Re-root a checkpointed Dataset on its materialized RDD with FRESH
     * default statistics. The RDD is reused as is, so the stage's
     * lifecycle stays with `graft.core.Stages`, which tracks it by RDD id.

@@ -273,8 +273,8 @@ class OperatorSpec extends AnyFunSuite {
     // base build (one file per writing task per bucket) + the fold-in
     // append fragment the store; compaction collapses each bucket to
     // EXACTLY one file (≤ numBuckets total — an empty bucket writes none)
-    assert(after <= Dedup.D13Buckets,
-      s"compaction must leave one file per bucket: $after > ${Dedup.D13Buckets}")
+    assert(after <= graft.core.Stores.Buckets,
+      s"compaction must leave one file per bucket: $after > ${graft.core.Stores.Buckets}")
     assert(after < before, s"compaction must shrink the file count ($before -> $after)")
     // and it is layout-only: the serve path must return identical rows
     val frag = Similarity.s11Search(spark, sf, codesT, ccT, fcT, cbT, k2).collect().toSeq
@@ -494,7 +494,7 @@ class OperatorSpec extends AnyFunSuite {
     val nBefore = dataFiles(verT)
     val (compT, _) = Similarity.s30Compact(spark, verT)
     val nAfter = dataFiles(compT)
-    assert(nAfter <= graft.operators.Dedup.D13Buckets,
+    assert(nAfter <= graft.core.Stores.Buckets,
       s"compaction must leave at most one file per bucket: $nAfter")
     assert(nAfter < nBefore, s"compaction must shrink files ($nBefore -> $nAfter)")
     def canon(df: org.apache.spark.sql.DataFrame) = df

@@ -111,4 +111,18 @@ class StagesSpec extends AnyFunSuite {
       .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(shim))
     assert(users.isEmpty, s"the hand-rolled release shim is back: $users")
   }
+
+  test("source scan: saveAsTable, bucketBy and DROP TABLE only inside Stores") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val users = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        Seq("saveAsTable", "bucketBy", "DROP TABLE").exists(text.contains)
+      }
+      .map(root.relativize(_).toString).toSet
+    assert(users == Set("graft/core/Stores.scala"),
+      "persist an index through graft.core.Stores")
+  }
 }
